@@ -1,10 +1,14 @@
 """End-to-end pipeline tests: oracle parity, planted semantic cases,
 triple P/R, determinism, resume idempotency."""
 
+import os
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from tests.oracle import Oracle
+from wikdict_gen_spark.operators import canonicalize
 from wikdict_gen_spark.pipeline import run_pipeline
 
 
@@ -220,13 +224,33 @@ class TestDeterminismAndResume:
         out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work), fused=True)
         cols = ["subj", "pred", "obj"]
         assert _rows(out["kg_edges"], cols) == _rows(built["kg_edges"], cols)
+        # canonical runs on the side thread; kg_nodes is built on this read
+        node_cols = ["node_id", "lang", "written_rep", "part_of_speech", "gender",
+                     "canonical_id"]
+        assert _rows(out["kg_nodes"], node_cols) == _rows(built["kg_nodes"], node_cols)
+
+        def importance(df):
+            return {r["node_id"]: r["importance"] for r in df.collect()}
+
+        assert importance(out["kg_nodes"]) == pytest.approx(importance(built["kg_nodes"]))
+        assert _rows(out["canonical"], ["node", "canonical"]) == _rows(
+            built["canonical"], ["node", "canonical"])
+        assert os.listdir(work) == []
         spark.catalog.clearCache()
+
+    def test_unknown_stop_after_rejected_before_spark(self, spark, tmp_path):
+        """A typo in stop_after must not silently build and commit the whole
+        pipeline: it raises before the corpus is even read."""
+        work = tmp_path / "work"
+        with pytest.raises(ValueError, match="all_trans") as err:
+            run_pipeline(spark, str(tmp_path / "missing.parquet"), str(work),
+                         stop_after="all_tran")
+        assert "'all_tran'" in str(err.value)
+        assert not work.exists()
 
     def test_resume_after_partial(self, spark, fixture_dir, built, tmp_path_factory):
         """Stop after an early stage, resume: final snapshot identical and
         committed stages are not recomputed (verified via marker mtimes)."""
-        import os
-
         work3 = tmp_path_factory.mktemp("pipeline3")
         run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work3), stop_after="all_trans")
         marker = os.path.join(work3, "all_trans", "_COMMITTED")
@@ -249,3 +273,43 @@ class TestDeterminismAndResume:
         run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work3))
         for s, m in mtimes.items():
             assert os.path.getmtime(os.path.join(work3, s, "_COMMITTED")) == m, s
+
+
+class TestFusedSideThread:
+    """Fused mode runs canonical on a side thread; a failure there is
+    retried once synchronously when canonical is read."""
+
+    def _run(self, spark, fixture_dir, tmp_path, monkeypatch, fail_times):
+        real = canonicalize.connected_components
+        calls = []
+
+        def flaky(edges):
+            calls.append(threading.current_thread())
+            if len(calls) <= fail_times:
+                raise OSError(f"injected failure {len(calls)}")
+            return real(edges)
+
+        monkeypatch.setattr(canonicalize, "connected_components", flaky)
+        out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(tmp_path),
+                           stop_after="canonical", fused=True)
+        return out, calls
+
+    def test_retry_returns_same_mapping(self, spark, fixture_dir, built, tmp_path,
+                                        monkeypatch):
+        out, calls = self._run(spark, fixture_dir, tmp_path, monkeypatch, fail_times=1)
+        cols = ["node", "canonical"]
+        assert _rows(out["canonical"], cols) == _rows(built["canonical"], cols)
+        assert len(calls) == 2
+        assert calls[0] is not threading.main_thread()
+        assert calls[1] is threading.main_thread()
+        spark.catalog.clearCache()
+
+    def test_second_failure_raises_with_original_chained(self, spark, fixture_dir,
+                                                         tmp_path, monkeypatch):
+        out, calls = self._run(spark, fixture_dir, tmp_path, monkeypatch, fail_times=2)
+        with pytest.raises(RuntimeError, match="injected failure 2") as err:
+            out["canonical"]
+        assert isinstance(err.value.__cause__, OSError)
+        assert str(err.value.__cause__) == "injected failure 1"
+        assert len(calls) == 2
+        spark.catalog.clearCache()

@@ -3,9 +3,10 @@
 extract_text: pages -> (url, lang, text) with the byte-identical cleaning
 contract, via one Arrow-batched pandas UDF over the binary html column.
 
-parse_records: cleaned text -> raw fact tables.  Record detection is pure
-JVM (split/explode/filter/element_at inside whole-stage codegen) — the
-expensive fan-out of page bodies into facts never touches Python.
+records / raw_table: cleaned text -> record lines -> raw fact tables.
+Record detection is pure JVM (split/explode/filter/element_at inside
+whole-stage codegen) — the expensive fan-out of page bodies into facts
+never touches Python.
 
 Scale shape: both steps are embarrassingly parallel map/flatMap over the
 pages scan; no shuffle is introduced before the first groupBy in the
@@ -56,54 +57,45 @@ def _f(i: int):
     return F.nullif(F.element_at(F.col("p"), i + 1), F.lit(""))
 
 
-def parse_records(extracted: DataFrame, recs: DataFrame | None = None) -> dict[str, DataFrame]:
-    """Structure detection: record lines -> raw fact DataFrames.
+# raw table -> (record tag, output columns).  A column source is a 1-based
+# record field ('' -> NULL) or a column of the records relation.
+_FORM_FEATS = [
+    "pos", "mood", "number", "person", "tense", "voice", "case",
+    "inflection", "definiteness", "gender",
+]
+RAW_LAYOUT: dict[str, tuple[str, list[tuple[int | str, str]]]] = {
+    "entry": ("entry", [(1, "lexentry"), (2, "vocable"), (3, "written_rep"), ("lang", "lang")]),
+    "pos": ("pos", [(1, "lexentry"), (2, "part_of_speech"), ("lang", "lang")]),
+    "gender": ("gender", [(1, "lexentry"), (2, "gender"), ("lang", "lang")]),
+    "pronun": ("pronun", [(1, "lexentry"), (2, "pronun"), ("lang", "lang")]),
+    "form": ("form", [(1, "lexentry"), (2, "other_written"),
+                      *[(3 + i, c) for i, c in enumerate(_FORM_FEATS)], ("lang", "lang")]),
+    "translation": ("trans", [(1, "lexentry"), (2, "sense_num"), (3, "trans_kind"),
+                              ("lang", "from_lang"), (4, "to_lang"), (5, "sense"),
+                              (6, "trans")]),
+    "nym": ("nym", [(1, "f"), (2, "nym"), (3, "t_rep"), ("lang", "lang")]),
+}
 
-    Returns dict with keys entry/pos/gender/pronun/form/translation/nym.
-    Shapes mirror the reference's raw tables (schemas.RAW_*).  Pass a
-    pre-materialized `recs` (from records()) to avoid re-exploding the
-    page bodies once per fact table.
+
+def raw_table(recs: DataFrame, name: str) -> DataFrame:
+    """Structure detection: record lines -> one raw fact DataFrame.
+
+    Shapes mirror the reference's raw tables (schemas.RAW_*); each is a
+    lazy filter + projection of the records relation.
+    """
+    tag, cols = RAW_LAYOUT[name]
+    return recs.where(F.col("tag") == f"#{tag}").select(*[
+        (_f(src) if isinstance(src, int) else F.col(src)).alias(alias)
+        for src, alias in cols
+    ])
+
+
+def parse_records(extracted: DataFrame, recs: DataFrame | None = None) -> dict[str, DataFrame]:
+    """Every raw fact table, keyed entry/pos/gender/pronun/form/translation/nym.
+
+    Pass a pre-materialized `recs` (from records()) to avoid re-exploding
+    the page bodies once per fact table.
     """
     if recs is None:
         recs = records(extracted)
-
-    def tagged(tag: str) -> DataFrame:
-        return recs.where(F.col("tag") == f"#{tag}")
-
-    entry = tagged("entry").select(
-        _f(1).alias("lexentry"), _f(2).alias("vocable"), _f(3).alias("written_rep"), "lang"
-    )
-    pos = tagged("pos").select(_f(1).alias("lexentry"), _f(2).alias("part_of_speech"), "lang")
-    gender = tagged("gender").select(_f(1).alias("lexentry"), _f(2).alias("gender"), "lang")
-    pronun = tagged("pronun").select(_f(1).alias("lexentry"), _f(2).alias("pronun"), "lang")
-    form_feats = [
-        "pos", "mood", "number", "person", "tense", "voice", "case",
-        "inflection", "definiteness", "gender",
-    ]
-    form = tagged("form").select(
-        _f(1).alias("lexentry"),
-        _f(2).alias("other_written"),
-        *[_f(3 + i).alias(c) for i, c in enumerate(form_feats)],
-        "lang",
-    )
-    translation = tagged("trans").select(
-        _f(1).alias("lexentry"),
-        _f(2).alias("sense_num"),
-        _f(3).alias("trans_kind"),
-        F.col("lang").alias("from_lang"),
-        _f(4).alias("to_lang"),
-        _f(5).alias("sense"),
-        _f(6).alias("trans"),
-    )
-    nym = tagged("nym").select(
-        _f(1).alias("f"), _f(2).alias("nym"), _f(3).alias("t_rep"), "lang"
-    )
-    return {
-        "entry": entry,
-        "pos": pos,
-        "gender": gender,
-        "pronun": pronun,
-        "form": form,
-        "translation": translation,
-        "nym": nym,
-    }
+    return {name: raw_table(recs, name) for name in RAW_LAYOUT}

@@ -11,10 +11,11 @@ file" input-skew case of the optimization playbook: the fix is one
 widening shuffle immediately after the read, paid ONLY when the layout is
 actually under-parallel.
 
-``widen_if_narrow`` is that guard (the same discipline as the pipeline's
-pages-scan guard, wikdict_gen_spark/pipeline.py): if the input's physical
-partition count is below the cluster's core count, round-robin
-repartition to ``factor``× cores; otherwise return the input untouched.
+``widen_if_narrow`` is that guard (the pipeline's pages scan,
+wikdict_gen_spark/pipeline.py, and every ``__spark_entry__`` table read go
+through it): if the input's physical partition count is below the
+cluster's core count, round-robin repartition to ``factor``× cores;
+otherwise return the input untouched.
 A normally-laid-out corpus (many files / row groups — any real crawl at
 cluster scale) already plans >= cores partitions and skips the shuffle
 entirely, so the guard is scale-adaptive by construction: it costs one

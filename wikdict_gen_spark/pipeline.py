@@ -1,15 +1,18 @@
 """End-to-end KG-construction pipeline: pages -> kg.nodes + kg.edges.
 
-Stage DAG (each stage = one committed snapshot, resumable via Catalog):
+The DAG is one ordered table (`_stages`) run by one loop (`run_pipeline`);
+every non-view stage is one committed snapshot, resumable via Catalog.
+Stages in build order (main data flow; `_stages` lists every input):
 
-    pages ── extract ── raw_* ──┬─ entry ─┬─ importance ─┐
-                                │         ├─ form        │
-                                │         └──────────────┼─ translation ─ all_trans
-                                │                        │        │
-                                └─ nym ── alias_edges ── canonical │
-                                                          │   backlink ─ infer ─ infer_grouped
-                                                          │        │
-                                                 kg_nodes ┴─ kg_edges
+    pages → extracted → records → raw_*            (seven lazy views)
+    raw_* → entry → alias_edges → canonical        (fused: CC on a side thread)
+    raw_* → form
+    raw_* → translation_clean → importance → translation_base → translation
+          → all_trans → backlink → indirect → infer
+    infer → infer_grouped → translation_graded → translation_grouped
+    infer, importance → simple_translation
+    infer, entry, form, raw_* → kg_edges
+    entry, importance, canonical → kg_nodes
 
 Kill the driver after any stage and re-run: committed stages are read
 back, nothing is recomputed, and the final snapshot is identical (tested).
@@ -17,18 +20,22 @@ back, nothing is recomputed, and the final snapshot is identical (tested).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import threading
+from functools import partial
 
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 from wikdict_gen_spark.catalog import Catalog
+from wikdict_gen_spark.operators import canonicalize, generic, infer, materialize, process
+from wikdict_gen_spark.operators.extract import RAW_LAYOUT, extract_text, raw_table, records
+from wikdict_gen_spark.operators.partitioning import widen_if_narrow
 
 # memory+disk, serialized (PySpark exposes no _SER constant)
 _CKPT_LEVEL = StorageLevel(True, True, False, False, 1)
-from wikdict_gen_spark.operators import canonicalize, generic, infer, materialize, process
-from wikdict_gen_spark.operators.extract import extract_text, parse_records, records
 
-RAW_TABLES = ["entry", "pos", "gender", "pronun", "form", "translation", "nym"]
+# partition_by of a lazy derivation that is neither committed nor checkpointed
+VIEW = "view"
 
 # Stages referenced by 2+ downstream consumers.  In fused mode these are
 # the ONLY lineage-cut points: a re-referenced stage must be checkpointed
@@ -40,7 +47,7 @@ RAW_TABLES = ["entry", "pos", "gender", "pronun", "form", "translation", "nym"]
 # infer_grouped if a caller materializes it separately) recomputes from
 # the nearest upstream checkpoint — bounded by construction.
 FANOUT_STAGES = frozenset({
-    # NOT "extracted": parse_records reads the records relation, never the
+    # NOT "extracted": the raw tables read the records relation, never the
     # extracted text itself, so records() is its only real consumer — the
     # full cleaned corpus text flows straight into the record explode
     # without being materialized a second time
@@ -56,56 +63,98 @@ FANOUT_STAGES = frozenset({
 })
 
 
-class LazyStages(dict):
-    """Stage dict whose entries can resolve on first access.
+def _kg_edges(fused: DataFrame, entry: DataFrame, raw_pronun: DataFrame,
+              form: DataFrame, raw_nym: DataFrame) -> DataFrame:
+    return materialize.translation_edges(fused).unionByName(
+        materialize.structural_edges(entry, raw_pronun, form, raw_nym))
 
-    Used by fused mode to keep the CC side thread running underneath the
-    terminal kg_edges write: 'canonical'/'kg_nodes' join the thread only
-    when a caller actually reads them.
 
-    Keeps dict invariants for consumers that iterate: keys()/items()/
-    values()/len() include unresolved thunk names (items()/values()
-    resolve on iteration), so snapshotting `dict(stages)` or validating
-    every stage sees the lazy entries too.
+def _stages() -> list[tuple]:
+    """The DAG in build order: (name, inputs, build, partition_by).
+
+    build(*inputs) returns the stage's DataFrame; "pages" is the scanned
+    corpus.  Resolved per run, so a patched operator is picked up.
     """
+    return [
+        ("extracted", ("pages",), extract_text, None),
+        # explode page bodies into record lines exactly once; the seven raw
+        # tables are lazy filters of this snapshot (a filter of committed
+        # parquet costs nothing to re-derive — committing each one
+        # separately only adds serial snapshot latency)
+        ("records", ("extracted",), records, None),
+        *[(f"raw_{t}", ("records",), partial(raw_table, name=t), VIEW) for t in RAW_LAYOUT],
+        ("entry", ("raw_entry", "raw_pos", "raw_gender", "raw_pronun"), process.make_entry,
+         None),
+        # canonical directly after entry: in fused mode its CC loop then
+        # overlaps the whole translation chain (measured faster than
+        # starting it at the end of that chain, or not overlapping it)
+        ("alias_edges", ("entry", "raw_nym"), canonicalize.alias_edges, None),
+        ("canonical", ("alias_edges",), canonicalize.connected_components, None),
+        ("form", ("raw_form",), process.make_form, None),
+        ("translation_clean", ("raw_translation",), process.clean_translations, None),
+        ("importance", ("entry", "translation_clean", "raw_nym"), process.make_importance,
+         None),
+        ("translation_base", ("translation_clean", "entry", "importance"),
+         process.make_translation_base, None),
+        ("translation", ("translation_base", "importance"),
+         partial(process.make_translation, audit=False), None),
+        ("all_trans", ("translation",), process.make_all_trans, None),
+        ("backlink", ("all_trans",), infer.backlink_score, None),
+        ("indirect", ("all_trans", "backlink"), infer.indirect, None),
+        ("infer", ("all_trans", "backlink", "indirect"), infer.fuse_evidence, None),
+        ("infer_grouped", ("infer",), infer.group_inferred, None),
+        ("translation_graded", ("infer_grouped",), generic.grade_translations, None),
+        ("translation_grouped", ("translation_graded",), generic.group_translations, None),
+        ("simple_translation", ("infer", "importance"), generic.simple_translations, None),
+        ("kg_edges", ("infer", "entry", "raw_pronun", "form", "raw_nym"), _kg_edges,
+         ["from_lang"]),
+        ("kg_nodes", ("entry", "importance", "canonical"), materialize.build_nodes, ["lang"]),
+    ]
 
-    def __init__(self) -> None:
-        super().__init__()
-        self._thunks: dict[str, object] = {}
 
-    def lazy(self, name: str, thunk) -> None:
-        self._thunks[name] = thunk
+class _Stages(dict):
+    """Stage name -> DataFrame; a name in `pending` is built on first read."""
 
-    def _resolve(self, key: str) -> None:
-        if not super().__contains__(key) and key in self._thunks:
-            self[key] = self._thunks.pop(key)()
+    def __init__(self, **stages: DataFrame) -> None:
+        super().__init__(stages)
+        self.pending: dict[str, object] = {}
 
-    def __getitem__(self, key):
-        self._resolve(key)
-        return super().__getitem__(key)
+    def __missing__(self, name: str) -> DataFrame:
+        self[name] = df = self.pending.pop(name)()
+        return df
 
-    def get(self, key, default=None):
-        self._resolve(key)
-        return super().get(key, default)
 
-    def __contains__(self, key) -> bool:
-        return super().__contains__(key) or key in self._thunks
+def _on_side_thread(name: str, build, args: list[DataFrame]):
+    """Start build(*args) on a daemon thread; return the thunk that joins it.
 
-    def __len__(self) -> int:
-        return super().__len__() + len(self._thunks)
+    A failure on the thread is retried once synchronously at the join, so a
+    transient executor hiccup does not sink the run at its last read; if
+    the retry fails too, the original error is chained.
+    """
+    box: dict[str, object] = {}
 
-    def __iter__(self):
-        yield from super().__iter__()
-        yield from list(self._thunks)
+    def run() -> None:
+        try:
+            box["df"] = build(*args)
+        except BaseException as exc:  # noqa: BLE001 — re-raised at the join
+            box["err"] = exc
 
-    def keys(self):
-        return list(self)
+    thread = threading.Thread(target=run, name=f"stage-{name}", daemon=True)
+    thread.start()
 
-    def items(self):
-        return [(k, self[k]) for k in list(self)]
+    def join() -> DataFrame:
+        thread.join()
+        if "err" not in box:
+            return box["df"]
+        try:
+            return build(*args)
+        except BaseException as exc:
+            raise RuntimeError(
+                f"stage {name!r} failed on its side thread and on synchronous "
+                f"retry ({exc!r})"
+            ) from box["err"]
 
-    def values(self):
-        return [self[k] for k in list(self)]
+    return join
 
 
 def run_pipeline(
@@ -115,7 +164,8 @@ def run_pipeline(
     stop_after: str | None = None,
     fused: bool = False,
 ) -> dict[str, DataFrame]:
-    """Run (or resume) the full pipeline; returns all stage DataFrames.
+    """Run (or resume) the full pipeline; returns all stage DataFrames
+    (and the scanned `pages`).
 
     stop_after: name of the last stage to commit (for resume testing).
 
@@ -135,191 +185,47 @@ def run_pipeline(
     is fused-mode fault-tolerance (lost executors can't recompute a local
     checkpoint) — acceptable by construction: fused mode IS the
     no-resume shape, checkpointed mode is the durable one.
+
+    Fused mode also runs canonical (alias edges + iterative CC, an eager
+    driver-side loop only kg_nodes reads) on a side thread: its small jobs
+    interleave with the translation chain on idle task slots instead of
+    serializing in front of the terminal writes.  A stage that reads it
+    (kg_nodes) is built when the caller first reads that stage.
     """
+    stages = _stages()
+    names = [name for name, *_ in stages]
+    if stop_after is not None and stop_after not in names:
+        raise ValueError(f"unknown stop_after stage {stop_after!r}; valid: {', '.join(names)}")
     cat = Catalog(spark, workdir)
-    out: LazyStages = LazyStages()
-    done = [False]
-    # bind the mode once: stage() must not read `fused` through the closure,
-    # a later local rebind would silently flip every subsequent stage to the
-    # uncommitted path (DataFrames have no __bool__, so they are truthy)
-    fused_mode = bool(fused)
-
-    def stage(name: str, build, partition_by: list[str] | None = None) -> DataFrame:
-        if done[0]:
-            return None  # type: ignore[return-value]
-        if fused_mode:
-            df = build()
-            if name in FANOUT_STAGES:
-                # serialized blocks: checkpointed stages are re-scanned by
-                # several consumers, and deserialized row objects make those
-                # scans GC-bound (measured ~6% pipeline wall at 4 cores)
-                df = df.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
-        else:
-            df = cat.ensure(name, build, partition_by)
-        out[name] = df
-        if stop_after == name:
-            done[0] = True
-        return df
-
-    cores = spark.sparkContext.defaultParallelism
-    pages = spark.read.parquet(pages_path)
     # a pathological corpus layout (one unsplittable row group) would leave
     # the extraction UDFs under-parallel; only then is a widening shuffle
-    # of the raw html worth paying.  A normally-laid-out corpus (many
-    # files / small row groups — a real crawl) already scans at >= cores
-    # partitions and skips this: the repartition moves every html byte
-    # through one full exchange, measured ~20% of pipeline wall when it
-    # fired on an already-parallel scan.
-    # cheap file-count short-circuit first: >= cores files can never be
-    # under-parallel — but only under the default file-split configs
-    # (FileScan bin-packs many files into fewer splits when
-    # maxPartitionBytes/openCostInBytes are raised, so the file count
-    # stops bounding the split count); with non-default configs the rdd
-    # partition probe stays the authority
-    def _default_split_conf() -> bool:
-        get = spark.conf.get
-        return (
-            get("spark.sql.files.maxPartitionBytes", "134217728b").rstrip("b")
-            == "134217728"
-            and get("spark.sql.files.openCostInBytes", "4194304b").rstrip("b")
-            == "4194304"
-        )
+    # of the raw html worth paying
+    out = _Stages(pages=widen_if_narrow(spark.read.parquet(pages_path)))
 
-    if (
-        len(pages.inputFiles()) < cores or not _default_split_conf()
-    ) and pages.rdd.getNumPartitions() < cores:
-        pages = pages.repartition(cores * 2)
-    extracted = stage("extracted", lambda: extract_text(pages))
-    if done[0]:
-        return out
+    def build_stage(name: str, inputs: tuple[str, ...], build, partition_by) -> DataFrame:
+        args = [out[i] for i in inputs]
+        if partition_by == VIEW:
+            return build(*args)
+        if not fused:
+            return cat.ensure(name, lambda: build(*args), partition_by)
+        df = build(*args)
+        if name in FANOUT_STAGES:
+            # serialized blocks: checkpointed stages are re-scanned by
+            # several consumers, and deserialized row objects make those
+            # scans GC-bound (measured ~6% pipeline wall at 4 cores)
+            df = df.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+        return df
 
-    # explode page bodies into record lines exactly once; the seven raw
-    # tables are lazy filters of this committed snapshot (a filter of
-    # committed parquet costs nothing to re-derive — committing each one
-    # separately only adds serial snapshot latency)
-    recs = stage("records", lambda: records(extracted))
-    if done[0]:
-        return out
-    raws = parse_records(extracted, recs)
-    out.update({f"raw_{t}": raws[t] for t in RAW_TABLES})
-    entry = stage("entry", lambda: process.make_entry(
-        raws["entry"], raws["pos"], raws["gender"], raws["pronun"]))
-    if done[0]:
-        return out
-
-    # Fused mode: start the canonicalization loop (alias edges + iterative
-    # CC — an eager driver-side loop only kg_nodes consumes) on a side
-    # thread as soon as its inputs exist.  Its small jobs interleave with
-    # the translation chain's materialization on idle task slots instead
-    # of serializing in front of the terminal writes.  The shared prefix
-    # (records/entry checkpoints) is forced first so the two threads never
-    # race to compute the same un-materialized checkpoint twice.
-    cc_thread = None
-    cc_box: dict[str, DataFrame] = {}
-    if fused_mode and stop_after is None:
-        import threading
-
-        entry.count()
-        aliases_early = canonicalize.alias_edges(entry, raws["nym"])
-
-        def _cc() -> None:
-            # capture failures: a raise in the side thread must surface at
-            # the consumer's read, not vanish into a KeyError('df') after a
-            # silent join()
-            try:
-                cc_box["df"] = canonicalize.connected_components(aliases_early)
-            except BaseException as exc:  # noqa: BLE001 — re-raised at read
-                cc_box["err"] = exc
-
-        cc_thread = threading.Thread(target=_cc, name="cc-loop", daemon=True)
-        cc_thread.start()
-    form = stage("form", lambda: process.make_form(raws["form"]))
-    if done[0]:
-        return out
-    translation_clean = stage("translation_clean", lambda: process.clean_translations(
-        raws["translation"]))
-    if done[0]:
-        return out
-    importance = stage("importance", lambda: process.make_importance(
-        entry, translation_clean, raws["nym"]))
-    if done[0]:
-        return out
-    translation_base = stage("translation_base", lambda: process.make_translation_base(
-        translation_clean, entry, importance))
-    if done[0]:
-        return out
-    translation = stage("translation", lambda: process.make_translation(
-        translation_base, importance, audit=False))
-    if done[0]:
-        return out
-    all_trans = stage("all_trans", lambda: process.make_all_trans(translation))
-    if done[0]:
-        return out
-
-    backlink = stage("backlink", lambda: infer.backlink_score(all_trans))
-    if done[0]:
-        return out
-    indirect_df = stage("indirect", lambda: infer.indirect(all_trans, backlink))
-    if done[0]:
-        return out
-    fused_df = stage("infer", lambda: infer.fuse_evidence(all_trans, backlink, indirect_df))
-    if done[0]:
-        return out
-    grouped = stage("infer_grouped", lambda: infer.group_inferred(fused_df))
-    if done[0]:
-        return out
-    graded = stage("translation_graded", lambda: generic.grade_translations(grouped))
-    if done[0]:
-        return out
-    stage("translation_grouped", lambda: generic.group_translations(graded))
-    if done[0]:
-        return out
-    stage("simple_translation", lambda: generic.simple_translations(fused_df, importance))
-    if done[0]:
-        return out
-
-    if cc_thread is not None:
-        # resolve-on-read: the CC thread keeps running underneath the
-        # terminal kg_edges job; callers that read canonical/kg_nodes pay
-        # the join only then (by which time CC has normally finished)
-        out["alias_edges"] = aliases_early
-
-        def _canonical() -> DataFrame:
-            cc_thread.join()
-            if "err" in cc_box:
-                # fall back to a synchronous recompute once, with the
-                # original failure chained for the log; a transient executor
-                # hiccup shouldn't sink the whole fused run at its last read
-                try:
-                    return canonicalize.connected_components(aliases_early)
-                except BaseException as exc:
-                    raise RuntimeError(
-                        "connected_components failed on the CC side thread "
-                        f"(original: {cc_box['err']!r}) and on synchronous retry"
-                    ) from exc
-            return cc_box["df"]
-
-        out.lazy("canonical", _canonical)
-        out.lazy(
-            "kg_nodes",
-            lambda: materialize.build_nodes(entry, importance, out["canonical"]),
-        )
-        stage("kg_edges", lambda: materialize.translation_edges(fused_df).unionByName(
-            materialize.structural_edges(entry, raws["pronun"], form, raws["nym"])),
-            ["from_lang"])
-        return out
-
-    aliases = stage("alias_edges", lambda: canonicalize.alias_edges(entry, raws["nym"]))
-    if done[0]:
-        return out
-    canonical = stage("canonical", lambda: canonicalize.connected_components(aliases))
-    if done[0]:
-        return out
-
-    stage("kg_edges", lambda: materialize.translation_edges(fused_df).unionByName(
-        materialize.structural_edges(entry, raws["pronun"], form, raws["nym"])),
-        ["from_lang"])
-    if done[0]:
-        return out
-    stage("kg_nodes", lambda: materialize.build_nodes(entry, importance, canonical), ["lang"])
+    for name, inputs, build, partition_by in stages:
+        if any(i in out.pending for i in inputs):
+            out.pending[name] = partial(build_stage, name, inputs, build, partition_by)
+        elif fused and name == "canonical":
+            # force the shared prefix first so the two threads never race
+            # to compute the same un-materialized checkpoint
+            out["entry"].count()
+            out.pending[name] = _on_side_thread(name, build, [out[i] for i in inputs])
+        else:
+            out[name] = build_stage(name, inputs, build, partition_by)
+        if name == stop_after:
+            break
     return out

@@ -9,45 +9,20 @@ from spark-submit.
 from __future__ import annotations
 
 import os
-import re
 import tempfile
 
 from pyspark.sql import SparkSession
 
 
-def _driver_gc_opts(driver_mem: str) -> str:
-    """Default driver-JVM memory flags (overridable via SPARK_GRAFT_GC_OPTS).
+def _default_driver_mem() -> str:
+    """Half of physical RAM, in MB.
 
-    ``-XX:+UseTransparentHugePages -Xms<heap-4g> -XX:+AlwaysPreTouch``:
-    the driver JVM in local[k] mode IS the executor, and the sustained
-    pipeline is memory-subsystem-bound — under a hypervisor every
-    first-touch page fault is a VM exit plus host-side backing work, and
-    this box's measured zeroing floor is ~250 MB/s when the host has not
-    yet backed the guest frames.  madvise'd huge pages cut the fault and
-    TLB-shootdown count 512x, and the startup pre-touch moves the
-    remaining cost out of the measured region entirely (it is a
-    once-per-boot host warmup: 116s cold, <1-15s on every later launch).
-    Measured on the full fused pipeline, interleaved same-session A/B,
-    local[32]: 44.8k -> 68.9k and 27.0k -> 86.5k triples/s, with the
-    18-query headline suite neutral (13.55s vs 13.74s).  THP alone
-    (without the pre-touch) is NOT safe: the 2M-page faults then land
-    inside short queries and the same headline regresses 14s -> 26s.
-    The -4g slack leaves G1 room above Xms so the tail never faults at
-    2M-page cost mid-query; if the driver memory string cannot be
-    parsed, fall back to THP-less defaults (never guess an Xms that
-    could exceed Xmx, which would abort the JVM at launch).
+    In local[k] mode the driver JVM is also the executor, so it gets the
+    larger share; the other half stays for the Python UDF workers, shuffle
+    and spill files (tmpfs under /dev/shm) and the OS.
     """
-    m = re.fullmatch(r"(\d+)([gGmM])", driver_mem.strip())
-    if not m:
-        return ""
-    n, unit = int(m.group(1)), m.group(2).lower()
-    mb = n * 1024 if unit == "g" else n
-    xms_mb = mb - 4096
-    if xms_mb < 1024:
-        return ""
-    return (
-        f"-XX:+UseTransparentHugePages -Xms{xms_mb}m -XX:+AlwaysPreTouch"
-    )
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
 
 
 def get_spark(
@@ -85,18 +60,15 @@ def get_spark(
         if executors is not None
         else f"local[{cpus}]"
     )
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    # SPARK_GRAFT_GC_OPTS replaces the memory-flag defaults wholesale so a
-    # production deployment (or an A/B) can run any collector/THP regime;
-    # the JIT/code-cache flags are unconditional (they fix a measured
-    # late-run cliff, see below) and apply to driver and executor alike.
-    # Executor JVMs (local-cluster emulation only; a real cluster sets
-    # executor flags via spark-submit) do NOT get the pre-touch defaults:
-    # their heaps are sized by executor_mem_mb, and N executors eagerly
-    # pre-touching N heaps at once is exactly the sandbox-memory pressure
-    # the emulation is meant to avoid.
-    gc_opts = os.environ.get("SPARK_GRAFT_GC_OPTS")
-    driver_gc = gc_opts if gc_opts is not None else _driver_gc_opts(driver_mem)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+    # SPARK_GRAFT_GC_OPTS appends collector/heap flags to driver and
+    # executor JVMs alike; the JIT/code-cache flags are unconditional (they
+    # fix a measured late-run cliff, see below).  THP is opt-in here and
+    # needs a pre-touched heap with it (-XX:+UseTransparentHugePages
+    # -Xms<n> -XX:+AlwaysPreTouch, n below the heap): THP alone moves the
+    # 2M-page faults into short queries (measured headline 14s -> 26s at
+    # local[32]).
+    gc_opts = os.environ.get("SPARK_GRAFT_GC_OPTS", "")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -164,20 +136,18 @@ def get_spark(
         # pipeline and ~10% SLOWER on the sf1.0-scale headline suite
         # (q_token_index 7.1s vs 5.0s, q_topk_mean_norm 4.9 vs 4.2 —
         # old-gen churn from wide aggregations suits G1's regioned heap);
-        # G1 is the right default, the knob records the trade.  The driver
-        # additionally defaults to THP + pinned-and-pretouched heap — the
-        # measurements and the why live on _driver_gc_opts above.
+        # G1 is the right default, the knob records the trade.
         .config(
             "spark.driver.extraJavaOptions",
             ("-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-             + driver_gc).strip(),
+             + gc_opts).strip(),
         )
         # same JIT/GC regime in separate executor JVMs (local-cluster mode;
         # no-op under local[k] where driver == executor)
         .config(
             "spark.executor.extraJavaOptions",
             ("-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-             + (gc_opts or "")).strip(),
+             + gc_opts).strip(),
         )
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
