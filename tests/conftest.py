@@ -1,3 +1,4 @@
+import itertools
 import os
 import shutil
 
@@ -24,3 +25,26 @@ def fixture_dir(tmp_path_factory):
     build_fixture(d, n_concepts=80, seed=42)
     yield str(d)
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def jobs_started(spark):
+    """jobs_started(fn) -> (ids of the Spark jobs fn() started, fn's result).
+
+    fn runs under a fresh job group; the listener bus is drained before the
+    status tracker is asked, so a job counted late is not missed."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"jobs-started-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    return run

@@ -2,20 +2,27 @@
 triple P/R, determinism, resume idempotency."""
 
 import os
+import shutil
 import threading
+from collections.abc import Mapping
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.oracle import Oracle
+from wikdict_gen_spark.catalog import Catalog
 from wikdict_gen_spark.operators import canonicalize
-from wikdict_gen_spark.pipeline import run_pipeline
+from wikdict_gen_spark.pipeline import VIEW, _Stages, _stages, run_pipeline
 
 
 @pytest.fixture(scope="module")
-def built(spark, fixture_dir, tmp_path_factory):
-    work = tmp_path_factory.mktemp("pipeline")
-    out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work))
+def built_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("pipeline")
+
+
+@pytest.fixture(scope="module")
+def built(spark, fixture_dir, built_dir):
+    out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(built_dir))
     return out
 
 
@@ -273,6 +280,89 @@ class TestDeterminismAndResume:
         run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work3))
         for s, m in mtimes.items():
             assert os.path.getmtime(os.path.join(work3, s, "_COMMITTED")) == m, s
+
+
+class TestLazyResume:
+    """Checkpointed resume opens a committed stage only when it is read."""
+
+    STAGES = [name for name, *_ in _stages()]
+    COMMITTED = [name for name, _, _, partition_by in _stages() if partition_by != VIEW]
+    NODE_COLS = ["node_id", "lang", "written_rep", "part_of_speech", "gender",
+                 "canonical_id"]
+
+    def _markers(self, work, skip=()):
+        return {s: os.path.getmtime(work / s / "_COMMITTED")
+                for s in self.COMMITTED if s not in skip}
+
+    def test_committed_workdir_starts_no_job(self, spark, fixture_dir, built, built_dir,
+                                             jobs_started):
+        jobs, out = jobs_started(
+            lambda: run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(built_dir)))
+        assert jobs == []
+        assert list(out) == ["pages", *self.STAGES]
+        assert out["kg_edges"].count() == built["kg_edges"].count()
+
+    def test_read_schema_is_inferred_schema(self, spark, built, built_dir):
+        assert len(self.COMMITTED) == 20
+        cat = Catalog(spark, built_dir)
+        for name in self.COMMITTED:
+            assert (built_dir / name / "_schema.json").exists(), name
+            inferred = spark.read.parquet(str(built_dir / name)).schema
+            assert cat.read(name).schema == inferred, name
+
+    def test_resume_without_schema_files(self, spark, fixture_dir, built, built_dir,
+                                         tmp_path, jobs_started):
+        """A workdir committed before schemas were saved still resumes: reads
+        fall back to inference, but only on first use, and nothing is
+        rebuilt."""
+        work = tmp_path / "work"
+        shutil.copytree(built_dir, work)
+        for f in work.glob("*/_schema.json"):
+            f.unlink()
+        before = self._markers(work)
+        jobs, out = jobs_started(
+            lambda: run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work)))
+        assert jobs == []
+        assert out["kg_nodes"].schema == built["kg_nodes"].schema
+        assert _rows(out["kg_nodes"], self.NODE_COLS) == _rows(built["kg_nodes"],
+                                                               self.NODE_COLS)
+        assert self._markers(work) == before
+        assert list(work.glob("*/_schema.json")) == []
+
+    def test_uncommitted_dir_rebuilt(self, spark, fixture_dir, built, built_dir, tmp_path):
+        """A stage directory without _COMMITTED (here: another table's data
+        and schema) is rebuilt and committed, not read."""
+        work = tmp_path / "work"
+        shutil.copytree(built_dir, work)
+        shutil.rmtree(work / "kg_nodes")
+        shutil.copytree(work / "form", work / "kg_nodes")
+        (work / "kg_nodes" / "_COMMITTED").unlink()
+        others = self._markers(work, skip={"kg_nodes"})
+        out = run_pipeline(spark, f"{fixture_dir}/pages.parquet", str(work))
+        assert (work / "kg_nodes" / "_COMMITTED").exists()
+        assert _rows(out["kg_nodes"], self.NODE_COLS) == _rows(built["kg_nodes"],
+                                                               self.NODE_COLS)
+        assert Catalog(spark, work).read("kg_nodes").schema == built["kg_nodes"].schema
+        assert self._markers(work, skip={"kg_nodes"}) == others
+
+
+class TestStagesMapping:
+    def test_pending_names_visible_without_building(self):
+        calls = []
+        stages = _Stages()
+        stages.add("a", "A")
+        stages.defer("b", lambda: calls.append("b") or "B")
+        assert isinstance(stages, Mapping)
+        assert "b" in stages and "c" not in stages
+        assert len(stages) == 2
+        assert list(stages) == ["a", "b"]
+        assert calls == []
+        assert stages.get("b") == "B"
+        assert stages["b"] == "B"
+        assert calls == ["b"]
+        assert stages.get("c") is None
+        with pytest.raises(KeyError):
+            stages["c"]
 
 
 class TestFusedSideThread:

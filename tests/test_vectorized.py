@@ -1,11 +1,16 @@
 # -*- coding: utf-8 -*-
-"""Vectorized forms must agree element-wise with the scalar contract functions."""
+"""Vectorized (pandas and JVM column) forms must agree element-wise with the
+scalar contract functions."""
+
+import random
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from wikdict_gen_spark.functions import textclean as tc
 from wikdict_gen_spark.functions import vectorized as vec
+from wikdict_gen_spark.operators.process import clean_inflection_col
 
 TRICKY = [
     None,
@@ -55,12 +60,64 @@ def test_parse_sense_series(lang):
     assert [None if pd.isna(g) else g for g in got] == want
 
 
-def test_clean_inflection_series():
-    vals = ["er/sie/es geht", "es ist schön", "wirf!", "die Bäume", "keep me"]
-    langs = ["de", "de", "de", "de", "en"]
-    got = vec.clean_inflection_series(pd.Series(vals), pd.Series(langs))
-    want = [tc.clean_inflection(v, lang) for v, lang in zip(vals, langs)]
-    assert list(got) == want
+# (value, lang, cleaned): the German scaffolding rules plus the places
+# where Python's and Java's regex dialects differ (`\s`, `$`)
+INFLECTION_GOLDEN = [
+    ("er/sie/es geht", "de", "geht"),
+    ("es ist schön", "de", "schön"),
+    ("wirf!", "de", "wirf"),
+    ("die Bäume", "de", "Bäume"),
+    ("die Bäume", "en", "die Bäume"),
+    ("die Bäume", None, "die Bäume"),
+    (None, "de", None),
+    ("ich  ist\tgut!", "de", "gut"),
+    ("der das Haus", "de", "das Haus"),
+    ("ersie geht", "de", "ersie geht"),
+    ("Er geht", "de", "Er geht"),
+    ("ich\u00a0gehe", "de", "gehe"),            # NBSP is whitespace to Python
+    ("du\u3000gehst", "de", "gehst"),
+    ("du\u200bgehst", "de", "du\u200bgehst"),  # zero-width space is not
+    ("geh!\n", "de", "geh\n"),                 # `$` before one final newline
+    ("geh!\n\n", "de", "geh!\n\n"),
+    ("geh!\r", "de", "geh!\r"),                # Java's `$` would match here
+    ("geh!\u2028", "de", "geh!\u2028"),
+    ("geh! ", "de", "geh! "),
+]
+
+_INFLECTION_TOKENS = [
+    "er/sie/es", "ich", "du", "er", "sie", "es", "wir", "ihr", "ist", "der",
+    "die", "das", "!", "Haus", "geh", "ä", "\U0001d518", "/", "\u200b", "\u180e",
+    "\ufeff", "\x1b", *[c for c in map(chr, range(0x3001)) if c.isspace()],
+]
+
+
+def _fuzz_inflection(n, seed=20240817):
+    rng = random.Random(seed)
+    return [
+        ("".join(rng.choice(_INFLECTION_TOKENS) for _ in range(rng.randint(0, 6))),
+         rng.choice(["de", "de", "de", "en", None]))
+        for _ in range(n)
+    ]
+
+
+def test_clean_inflection_column(spark):
+    """The JVM regexp_replace form of clean_inflection matches the scalar
+    Python contract on golden vectors and on 20 000 seeded fuzz values."""
+    for value, lang, want in INFLECTION_GOLDEN:
+        if value is not None:
+            assert tc.clean_inflection(value, lang) == want, (value, lang)
+    cases = [(v, lang) for v, lang, _ in INFLECTION_GOLDEN] + _fuzz_inflection(20_000)
+    df = spark.createDataFrame(
+        [(i, v, lang) for i, (v, lang) in enumerate(cases)],
+        schema="id long, value string, lang string",
+    )
+    got = dict(df.select("id", clean_inflection_col(F.col("value"), F.col("lang"))).collect())
+    mismatches = [
+        (v, lang, got[i])
+        for i, (v, lang) in enumerate(cases)
+        if got[i] != (None if v is None else tc.clean_inflection(v, lang))
+    ]
+    assert mismatches == []
 
 
 def test_sense_num_series():

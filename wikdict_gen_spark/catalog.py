@@ -4,9 +4,13 @@ Locally this is parquet directories with commit markers; on a cluster the
 same interface maps 1:1 onto Iceberg tables (`writeTo(...).createOrReplace`
 gives the atomic snapshot, `snapshotExists` becomes a catalog lookup).
 The commit protocol here: write to `<name>.tmp`, fsync via Spark job
-completion, atomic rename to `<name>`, then write the `_COMMITTED` marker.
-A stage interrupted mid-write leaves only a tmp directory and is re-run on
-resume; a committed stage is never recomputed (north_rule resumability).
+completion, atomic rename to `<name>`, save the read-back schema as
+`<name>/_schema.json`, then write the `_COMMITTED` marker.  The marker is
+the single commit point: a stage interrupted before the marker leaves a
+tmp or unmarked directory and is re-run on resume; a committed stage is never
+recomputed (north_rule resumability).  Reads pass the saved schema to the
+parquet reader, so opening a committed table starts no Spark job; a table
+committed without `_schema.json` falls back to schema inference.
 
 Every commit also appends per-partition lineage/metric rows to the
 `_metrics` table: (table, partition_id, rows, committed_seq).
@@ -20,7 +24,7 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -41,7 +45,11 @@ class Catalog:
 
     # -- io -------------------------------------------------------------------
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(str(self.path(name)))
+        reader = self.spark.read
+        schema = self.path(name) / "_schema.json"
+        if schema.exists():
+            reader = reader.schema(StructType.fromJson(json.loads(schema.read_text())))
+        return reader.parquet(str(self.path(name)))
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> DataFrame:
         """Atomically materialize df as table `name`; returns the read-back DF."""
@@ -58,11 +66,13 @@ class Catalog:
             shutil.rmtree(final)
         tmp.rename(final)
         self._record_metrics(name, time.monotonic() - t0)
-        self._marker(name).touch()
         # stage boundaries are also cache boundaries: drop persisted hot-key
         # sets / checkpoint RDDs so long pipelines don't accumulate heap debris
         self.spark.catalog.clearCache()
-        return self.read(name)
+        back = self.read(name)  # no _schema.json yet: the one inference job
+        (final / "_schema.json").write_text(back.schema.json())
+        self._marker(name).touch()
+        return back
 
     def ensure(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
         """Resume unit: return the committed table, or build+commit it."""

@@ -46,11 +46,6 @@ def sense_num_udf(s: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def clean_inflection_udf(s: pd.Series, lang: pd.Series) -> pd.Series:
-    return vec.clean_inflection_series(s, lang)
-
-
-@pandas_udf(StringType())
 def strip_gloss_trailer_udf(s: pd.Series) -> pd.Series:
     return vec.strip_gloss_trailer_series(s)
 

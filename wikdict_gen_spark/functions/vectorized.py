@@ -52,19 +52,6 @@ def clean_wiki_syntax_series(s: pd.Series) -> pd.Series:
     return s.mask(na, None)
 
 
-def clean_inflection_series(s: pd.Series, lang_s: pd.Series) -> pd.Series:
-    """Vectorized clean_inflection with per-row language dispatch."""
-    out = s.copy()
-    de = (lang_s == "de") & s.notna()
-    if de.any():
-        d = s.loc[de]
-        d = d.str.replace(tc._RE_DE_PRONOUN, "", regex=True)
-        d = d.str.replace(tc._RE_DE_BANG, "", regex=True)
-        d = d.str.replace(tc._RE_DE_ARTICLE, "", regex=True)
-        out.loc[de] = d
-    return out
-
-
 # anchored twin of _RE_SENSE_NUM: str.extract applies re.search, but the
 # scalar contract is re.match — 'x3' must raise, not silently become '03'
 _RE_SENSE_NUM_ANCHORED = re.compile(r"^(\d+)(\w)?")

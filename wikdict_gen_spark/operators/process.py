@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from wikdict_gen_spark import constants as C
 from wikdict_gen_spark.functions.spark_udfs import (
     clean_html_udf,
-    clean_inflection_udf,
     clean_wiki_syntax_udf,
     parse_sense_udf,
     sense_num_udf,
@@ -70,6 +69,27 @@ def surface_guess_col(vocable):
     return F.replace(F.substr(vocable, F.lit(5)), F.lit("_"), F.lit(" "))
 
 
+# Java-regex twins of textclean's German inflection patterns.  Python's
+# `\s` is every character with str.isspace(), spelled out here; Python's
+# `$` also matches before one trailing newline, Java's before any line
+# terminator, hence the explicit lookahead.
+_WS = r"[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+_DE_INFLECTION_JAVA = (
+    rf"^(er/sie/es|ich|du|er|sie|es|wir|ihr|sie){_WS}+(ist{_WS}+)?",
+    r"!(?=\n?\z)",
+    rf"^(der|die|das){_WS}+",
+)
+
+
+def clean_inflection_col(value, lang):
+    """textclean.clean_inflection as a JVM expression (no Python worker):
+    the three German patterns in order, identity for other languages."""
+    de = value
+    for pattern in _DE_INFLECTION_JAVA:
+        de = F.regexp_replace(de, pattern, "")
+    return F.when(lang == "de", de).otherwise(value)
+
+
 def make_entry(raw_entry: DataFrame, raw_pos: DataFrame, raw_gender: DataFrame,
                raw_pronun: DataFrame) -> DataFrame:
     """Assemble the entry dimension: one row per lexentry."""
@@ -98,22 +118,19 @@ def make_form(raw_form: DataFrame) -> DataFrame:
     The rank inventory is tiny (broadcast); the join predicate is NULL-safe
     equality over all 8 grammatical features plus language.
     """
-    spark = raw_form.sparkSession
-    rank_rows = [
-        {**{f: None for f in _INFL_FEATURES}, **r, "lang": lang}
+    # built on the JVM: a local-list createDataFrame runs a Python job
+    ranks = raw_form.sparkSession.range(1).select(F.inline(F.array(*[
+        F.struct(F.lit(lang).alias("lang"), F.lit(r["rank"]).alias("rank"),
+                 *[F.lit(r.get(f)).cast("string").alias(f) for f in _INFL_FEATURES])
         for lang, rows in INFLECTION_RANKS.items()
         for r in rows
-    ]
-    ranks = spark.createDataFrame(
-        [[r["lang"], r["rank"]] + [r[f] for f in _INFL_FEATURES] for r in rank_rows],
-        schema="lang string, rank int, " + ", ".join(f"`{f}` string" for f in _INFL_FEATURES),
-    )
+    ])))
     cleaned = raw_form.withColumn(
         "other_written_full",
         clean_wiki_syntax_udf(clean_html_udf(F.col("other_written"))),
     ).withColumn(
         "other_written_clean",
-        clean_inflection_udf(F.col("other_written_full"), F.col("lang")),
+        clean_inflection_col(F.col("other_written_full"), F.col("lang")),
     )
     pred = cleaned["lang"] == ranks["lang"]
     for f in _INFL_FEATURES:

@@ -15,12 +15,16 @@ Stages in build order (main data flow; `_stages` lists every input):
     entry, importance, canonical → kg_nodes
 
 Kill the driver after any stage and re-run: committed stages are read
-back, nothing is recomputed, and the final snapshot is identical (tested).
+back on first use (by an uncommitted consumer or the caller), nothing is
+recomputed, and the final snapshot is identical (tested).  The pages scan
+and the raw_* views are likewise derived only when read, so resuming a
+fully committed workdir opens nothing and starts no Spark job.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable, Iterator, Mapping
 from functools import partial
 
 from pyspark import StorageLevel
@@ -112,16 +116,36 @@ def _stages() -> list[tuple]:
     ]
 
 
-class _Stages(dict):
-    """Stage name -> DataFrame; a name in `pending` is built on first read."""
+class _Stages(Mapping):
+    """Stage name -> DataFrame for every stage reached so far, in reach
+    order.  A name added with `defer` is built by its thunk on first read;
+    `in`, `len` and iteration see it without building it."""
 
-    def __init__(self, **stages: DataFrame) -> None:
-        super().__init__(stages)
-        self.pending: dict[str, object] = {}
+    def __init__(self) -> None:
+        self._dfs: dict[str, DataFrame | None] = {}
+        self.pending: dict[str, Callable[[], DataFrame]] = {}
 
-    def __missing__(self, name: str) -> DataFrame:
-        self[name] = df = self.pending.pop(name)()
-        return df
+    def add(self, name: str, df: DataFrame) -> None:
+        self._dfs[name] = df
+
+    def defer(self, name: str, thunk: Callable[[], DataFrame]) -> None:
+        self._dfs[name] = None
+        self.pending[name] = thunk
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if self._dfs[name] is None:
+            self._dfs[name] = self.pending[name]()
+            del self.pending[name]
+        return self._dfs[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._dfs
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._dfs)
+
+    def __len__(self) -> int:
+        return len(self._dfs)
 
 
 def _on_side_thread(name: str, build, args: list[DataFrame]):
@@ -163,9 +187,11 @@ def run_pipeline(
     workdir: str,
     stop_after: str | None = None,
     fused: bool = False,
-) -> dict[str, DataFrame]:
+) -> Mapping[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames
-    (and the scanned `pages`).
+    (and the scanned `pages`).  In checkpointed mode a committed stage is
+    opened on its first read, so resuming a fully committed workdir starts
+    no Spark job.
 
     stop_after: name of the last stage to commit (for resume testing).
 
@@ -197,10 +223,18 @@ def run_pipeline(
     if stop_after is not None and stop_after not in names:
         raise ValueError(f"unknown stop_after stage {stop_after!r}; valid: {', '.join(names)}")
     cat = Catalog(spark, workdir)
-    # a pathological corpus layout (one unsplittable row group) would leave
-    # the extraction UDFs under-parallel; only then is a widening shuffle
-    # of the raw html worth paying
-    out = _Stages(pages=widen_if_narrow(spark.read.parquet(pages_path)))
+    out = _Stages()
+
+    def scan() -> DataFrame:
+        # a pathological corpus layout (one unsplittable row group) would
+        # leave the extraction UDFs under-parallel; only then is a widening
+        # shuffle of the raw html worth paying
+        return widen_if_narrow(spark.read.parquet(pages_path))
+
+    if fused:
+        out.add("pages", scan())
+    else:
+        out.defer("pages", scan)
 
     def build_stage(name: str, inputs: tuple[str, ...], build, partition_by) -> DataFrame:
         args = [out[i] for i in inputs]
@@ -217,15 +251,25 @@ def run_pipeline(
         return df
 
     for name, inputs, build, partition_by in stages:
-        if any(i in out.pending for i in inputs):
-            out.pending[name] = partial(build_stage, name, inputs, build, partition_by)
-        elif fused and name == "canonical":
+        step = partial(build_stage, name, inputs, build, partition_by)
+        if not fused:
+            # checkpointed: a committed stage is opened, and a view derived,
+            # only when an uncommitted stage or the caller first reads it
+            if partition_by == VIEW:
+                out.defer(name, step)
+            elif cat.exists(name):
+                out.defer(name, partial(cat.read, name))
+            else:
+                out.add(name, step())
+        elif any(i in out.pending for i in inputs):
+            out.defer(name, step)
+        elif name == "canonical":
             # force the shared prefix first so the two threads never race
             # to compute the same un-materialized checkpoint
             out["entry"].count()
-            out.pending[name] = _on_side_thread(name, build, [out[i] for i in inputs])
+            out.defer(name, _on_side_thread(name, build, [out[i] for i in inputs]))
         else:
-            out[name] = build_stage(name, inputs, build, partition_by)
+            out.add(name, step())
         if name == stop_after:
             break
     return out

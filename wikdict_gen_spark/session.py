@@ -14,6 +14,10 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def _phys_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def _default_driver_mem() -> str:
     """Half of physical RAM, in MB.
 
@@ -21,8 +25,17 @@ def _default_driver_mem() -> str:
     larger share; the other half stays for the Python UDF workers, shuffle
     and spill files (tmpfs under /dev/shm) and the OS.
     """
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{phys // 2 // 2**20}m"
+    return f"{_phys_mb() // 2}m"
+
+
+def _local_cluster_mem(executors: int, executor_mem_mb: int | None) -> tuple[int, int]:
+    """(worker budget, executor heap) in MB for local-cluster mode.
+
+    The budget defaults to an equal share of physical RAM, capped at 20 GB;
+    the heap leaves a quarter of it, at most 2 GB, as off-heap headroom.
+    """
+    budget = executor_mem_mb or min(20480, _phys_mb() // executors)
+    return budget, budget - min(2048, budget // 4)
 
 
 def get_spark(
@@ -31,7 +44,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     executors: int | None = None,
     executor_cores: int = 2,
-    executor_mem_mb: int = 20480,
+    executor_mem_mb: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
@@ -44,10 +57,15 @@ def get_spark(
     N separate executor JVMs with their own heaps and GCs, the faithful
     sandbox emulation of an N-executor cluster (used by the scaling bench;
     on a real cluster spark-submit provides the master instead).
+    executor_mem_mb: each executor's worker budget in local-cluster mode;
+    defaults to an equal share of physical RAM (at most 20480).
     """
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    master = f"local[{cpus}]"
     if executors is not None:
         cpus = executors * executor_cores
+        worker_mb, executor_heap_mb = _local_cluster_mem(executors, executor_mem_mb)
+        master = f"local-cluster[{executors},{executor_cores},{worker_mb}]"
     shuffle = shuffle_partitions or cpus
     # shuffle spill to RAM-backed storage when available: the sandbox has
     # 125G RAM and small shuffles; on a cluster spark.local.dir comes from
@@ -55,11 +73,6 @@ def get_spark(
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"
-    master = (
-        f"local-cluster[{executors},{executor_cores},{executor_mem_mb}]"
-        if executors is not None
-        else f"local[{cpus}]"
-    )
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     # SPARK_GRAFT_GC_OPTS appends collector/heap flags to driver and
     # executor JVMs alike; the JIT/code-cache flags are unconditional (they
@@ -72,11 +85,6 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # local-cluster's [N,C,M] memory number only sizes the WORKER's
-        # allocation budget; the executor JVM heap itself comes from
-        # spark.executor.memory (default 1g — far too small for serialized
-        # checkpoint blocks).  Harmless under local[k] (driver == executor).
-        .config("spark.executor.memory", f"{executor_mem_mb - 2048}m")
         # AQE: runtime partition coalescing + skew-join splitting
         .config("spark.sql.adaptive.enabled", "true")
         .config(
@@ -159,6 +167,12 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
         )
     )
+    if executors is not None:
+        # local-cluster's [N,C,M] memory number only sizes the WORKER's
+        # allocation budget; the executor JVM heap itself comes from
+        # spark.executor.memory (default 1g — far too small for serialized
+        # checkpoint blocks).  Under local[k] the driver heap is the executor's.
+        builder = builder.config("spark.executor.memory", f"{executor_heap_mb}m")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
